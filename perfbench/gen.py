@@ -220,7 +220,7 @@ def _pick(rng, values, n, null_frac=0.0):
     return out
 
 
-def _values(col: str, rng, n: int, stamp_days: np.ndarray | None):
+def _values(col: str, rng, n: int, stamp_days: np.ndarray):
     """Payload values of one source column for ``n`` row versions."""
     if col == "fecmodi":
         return magic(stamp_days)
@@ -286,7 +286,7 @@ def _key_columns(keys: np.ndarray, seed: int, table: str) -> dict[str, np.ndarra
 
 
 def _rows(spec: TableSpec, seed: int, keys: np.ndarray, stamp_days: np.ndarray,
-          salt: str, lote: int | None) -> dict[str, np.ndarray]:
+          salt: str, lote: int) -> dict[str, np.ndarray]:
     rng = np.random.default_rng([seed, _salt(spec.name, salt)])
     fixed = _key_columns(keys, seed, spec.name)
     out = {}

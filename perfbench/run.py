@@ -26,6 +26,7 @@ import json
 import os
 import shutil
 import statistics
+import subprocess
 import sys
 import time
 from pathlib import Path
@@ -81,7 +82,7 @@ def stop_session(spark) -> None:
         proc.stdin.close()
         try:
             proc.wait(timeout=60)
-        except Exception:
+        except subprocess.TimeoutExpired:
             proc.kill()
             proc.wait()
 
@@ -124,7 +125,7 @@ def traced_passes(wl, seconds: float) -> tuple[list, dict[str, float]]:
     from perfbench import layers
     from perfbench.spans import Tracer
 
-    run_passes(wl, 0)
+    warm = run_passes(wl, 0)
     plain = run_passes(wl, seconds / 2)
     tracer = Tracer(wl.spark)
     layers.install(tracer)
@@ -144,7 +145,7 @@ def traced_passes(wl, seconds: float) -> tuple[list, dict[str, float]]:
     metrics = {k: statistics.median(m[k] for m in per_pass) for k in per_pass[0]}
     metrics["trace.overhead_s"] = (statistics.median(p.wall_s for p in traced)
                                    - statistics.median(p.wall_s for p in plain))
-    return plain + traced, metrics
+    return warm + plain + traced, metrics
 
 
 def measure(spark, cores: int, workload: str, seed: int, seconds: float,
