@@ -11,8 +11,8 @@ starts from a fresh directory and a cleared session, and its outputs are
 checked after its clock stops. ``setup_s`` is the session start plus the
 median generation plus the warm-up.
 
-``--trace 0`` prints the end-to-end metrics. ``--trace 1`` spends the
-first half of the time untraced and the second half with the span
+``--trace 0`` prints the end-to-end metrics. ``--trace 1`` runs one
+discarded pass, then half the time untraced and half with the span
 recorder installed (perfbench/layers.py), and prints the per-layer
 metrics plus the tracing overhead. The last stdout line is one JSON
 object: ``{"correct", "attempted", "failed", "metrics"}``; the line
