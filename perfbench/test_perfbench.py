@@ -4,8 +4,8 @@
 
 Checks the output contract against BENCHMARK.json (every metric printed
 with its unit, in both modes, on every workload), the span self-time
-arithmetic, job-group attribution under a thread pool, and the compare
-verdicts.
+arithmetic, the process-tree CPU clock, job-group attribution under a
+thread pool, and the compare verdicts.
 """
 
 from __future__ import annotations
@@ -13,6 +13,9 @@ from __future__ import annotations
 import json
 import re
 import shutil
+import subprocess
+import sys
+import time
 import types
 from concurrent.futures import ThreadPoolExecutor
 
@@ -85,6 +88,22 @@ def test_self_time_is_duration_minus_union_of_children():
     assert st[5] == pytest.approx(2.0)
 
 
+def test_tree_cpu_counts_live_and_reaped_children():
+    """A busy child counts while it runs and after it is reaped; time
+    spent sleeping does not count."""
+    burn = ("import time\nt = time.process_time()\n"
+            "while time.process_time() - t < 0.3: pass\n"
+            "print(flush=True)\ntime.sleep(0.3)")
+    before = workloads.tree_cpu_s()
+    child = subprocess.Popen([sys.executable, "-c", burn], stdout=subprocess.PIPE)
+    child.stdout.readline()
+    live = workloads.tree_cpu_s() - before
+    child.wait()
+    child.stdout.close()
+    done = workloads.tree_cpu_s() - before
+    assert 0.3 <= live <= done < 0.8
+
+
 def test_jobs_land_in_their_callers_job_group(spark):
     """Calls on a thread pool each get exactly their own job; a job
     launched after a nested call returns goes to the outer span."""
@@ -123,7 +142,6 @@ def tiny(monkeypatch):
     ])
     monkeypatch.setattr(workloads, "INGEST_DAYS", 1)
     monkeypatch.setattr(workloads, "CORPUS_DOCS", 200)
-    monkeypatch.setattr(workloads, "CORPUS_WARM_FRAC", 4)
 
 
 @pytest.mark.parametrize("trace", [0, 1])
